@@ -328,6 +328,52 @@ def test_cli_checksum_tikv_coprocessor_path(capsys, spark):
     assert out["src"]["total_kvs"] == 1000  # the fake's default corpus
 
 
+def test_cli_tikv_fake_range_clamps_partitions(spark, capsys):
+    """--start-key/--end-key go into the connector: the planned partitions
+    are the fake cluster's region sub-ranges clamped to the range, not a
+    whole-cluster scan filtered afterwards in Spark."""
+    import argparse
+
+    lo, hi = (150).to_bytes(8, "big"), (420).to_bytes(8, "big")
+    args = argparse.Namespace(start_key=lo.hex(), end_key=hi.hex(), key_format="hex")
+    k = cli._keyed(spark, "tikv+fake://x", ["key"], args)
+    # 1000 keys, a region split every 100: [150,200) [200,300) [300,400) [400,420)
+    assert k.df.rdd.getNumPartitions() == 4
+    parts = k.df.rdd.mapPartitions(lambda rows: [[bytes(r["key"]) for r in rows]]).collect()
+    assert [len(p) for p in parts] == [50, 100, 100, 20]
+    assert all(lo <= key < hi for p in parts for key in p)
+
+    rc = cli.main(["checksum", "--src", "tikv+fake://a", "--dst", "tikv+fake://b",
+                   "--keys", "key", "--start-key", lo.hex(), "--end-key", hi.hex()])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0 and out["src"]["total_kvs"] == 270
+
+
+def test_cli_manifest_against_streamed_manifest(capsys, spark, two_tables, tmp_path):
+    """A manifest maintained by manifest_stream with the hash-bucketing meta
+    is the same format the CLI saves: --against compares it clean."""
+    from tikv_data_compare_spark.operators.checksum import hash_bucketing
+    from tikv_data_compare_spark.streaming.manifest_stream import manifest_stream
+
+    src, _, _ = two_tables
+    keys = ("l_orderkey", "l_linenumber")
+    schema = spark.read.parquet(src).schema
+    m = str(tmp_path / "streamed_manifest")
+    bucket, meta = hash_bucketing(keys, 16)
+    q = manifest_stream(
+        spark.readStream.schema(schema).parquet(src), keys=keys, path=m,
+        bucket_expr=lambda: bucket, checkpoint_location=str(tmp_path / "ckpt"),
+        meta=meta,
+    )
+    q.awaitTermination(120)
+    rc = cli.main(["manifest", "--src", src, "--keys", ",".join(keys),
+                   "--against", m, "--buckets", "16"])
+    assert rc == 0
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])[
+        "drifted_buckets"
+    ] == 0
+
+
 def test_cli_diff_targeted_matches_full(capsys, two_tables):
     """--targeted-buckets localizes via per-bucket checksums first; the
     reported findings must be identical to the plain keyed diff."""

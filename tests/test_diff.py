@@ -308,6 +308,9 @@ def test_diff_tolerant_validation_and_nan(spark):
         diff_tolerant(Keyed.of(src, keys=("k",)), Keyed.of(dst, keys=("k",)), {"s": 0.1})
     with pytest.raises(ValueError, match="finite"):
         diff_tolerant(Keyed.of(src, keys=("k",)), Keyed.of(dst, keys=("k",)), {"p": nan})
+    # diff itself validates too: a NaN eps must not pass every row as equal
+    with pytest.raises(ValueError, match="finite"):
+        diff(Keyed.of(src, keys=("k",)), Keyed.of(dst, keys=("k",)), tolerances={"p": nan})
     got = {
         r["k"]: r["status"]
         for r in diff_tolerant(

@@ -195,3 +195,29 @@ def test_range_bucket_null_and_empty_edges(spark):
         for r in df.withColumn("b", range_bucket_col("k", [])).collect()
     }
     assert got0 == {(None, -1), (5, 0), (50, 0)}
+
+
+def test_fold_continues_saved_manifest(spark, orders_keyed, tmp_path):
+    """Saved and streamed manifests share one format: a batch save writes
+    last_epoch = -1, so a fold at epoch 0 continues it in place, and the
+    combined manifest compares clean against the whole snapshot."""
+    from tikv_data_compare_spark.operators.checksum import hash_bucketing
+    from tikv_data_compare_spark.streaming.manifest_stream import (
+        fold_batch_into_manifest,
+    )
+
+    d = str(tmp_path / "m")
+    bucket, meta = hash_bucketing(["k"], 8)
+    first = Keyed.of(orders_keyed.df.filter("k < 120"), keys=("k",))
+    rest = Keyed.of(orders_keyed.df.filter("k >= 120"), keys=("k",))
+    save_checksum_manifest(first, d, bucket, meta=meta)
+    saved = spark.read.parquet(d)
+    assert saved.columns == ["bucket", "cksum", "kvs", "algo", "last_epoch", "n_buckets"]
+    assert {r["last_epoch"] for r in saved.collect()} == {-1}
+    assert fold_batch_into_manifest(rest, d, bucket, epoch_id=0, meta=meta) is True
+    assert fold_batch_into_manifest(rest, d, bucket, epoch_id=0, meta=meta) is False
+    assert compare_to_manifest(orders_keyed, d, bucket, meta=meta).count() == 0
+    # the stored bucketing metadata must be stated by every compare
+    with pytest.raises(ValueError, match="hash-bucketed"):
+        compare_to_manifest(orders_keyed, d, bucket)
+

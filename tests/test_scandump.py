@@ -56,14 +56,6 @@ def test_dump_range_pushdown(spark, dump):
     assert filt.count() == expected.count() == 900
 
 
-def test_dump_explicit_range_options(spark, dump):
-    small, path = dump
-    keys = sorted(r["key"] for r in small.df.select("key").collect())
-    lo, hi = keys[100], keys[200]
-    got = load_scan_dump(spark, path, start=lo, end=hi)
-    assert got.count() == 100
-
-
 def test_dump_malformed_line_raises(spark, tmp_path):
     p = tmp_path / "bad_scan.log"
     p.write_text("key:00, value:11, cnt:1.\nnot a dump line\n")

@@ -312,7 +312,7 @@ def test_manifest_stream_equals_batch_manifest(spark, tmp_path):
 
     streamed = {
         r["bucket"]: (r["cksum"], r["kvs"])
-        for r in spark.read.parquet(f"{mpath}/triples").collect()
+        for r in spark.read.parquet(mpath).collect()
     }
     batch = {
         r["bucket"]: (r["cksum"], r["kvs"])
@@ -328,7 +328,7 @@ def test_manifest_stream_equals_batch_manifest(spark, tmp_path):
     )
     report = compare_to_manifest(
         Keyed.of(drifted, keys=("k",)),
-        spark.read.parquet(f"{mpath}/triples"),
+        spark.read.parquet(mpath),
         F.floor(F.col("k") / 50),
     ).collect()
     assert [(r["bucket"], r["status"]) for r in report] == [(2, "changed")]
@@ -348,16 +348,16 @@ def test_manifest_fold_skips_redelivered_epoch(spark, tmp_path):
     bucket = F.floor(F.col("k") / 50)
     assert fold_batch_into_manifest(keyed, mpath, bucket, epoch_id=0) is True
     before = sorted(
-        tuple(r) for r in spark.read.parquet(f"{mpath}/triples").collect()
+        tuple(r) for r in spark.read.parquet(mpath).collect()
     )
     assert fold_batch_into_manifest(keyed, mpath, bucket, epoch_id=0) is False
     after = sorted(
-        tuple(r) for r in spark.read.parquet(f"{mpath}/triples").collect()
+        tuple(r) for r in spark.read.parquet(mpath).collect()
     )
     assert after == before
     # a NEW epoch does apply (kvs doubles for every bucket)
     assert fold_batch_into_manifest(keyed, mpath, bucket, epoch_id=1) is True
-    kvs = {r["bucket"]: r["kvs"] for r in spark.read.parquet(f"{mpath}/triples").collect()}
+    kvs = {r["bucket"]: r["kvs"] for r in spark.read.parquet(mpath).collect()}
     assert all(v == 100 for v in kvs.values())
 
 
@@ -417,7 +417,7 @@ def test_manifest_stream_restart_folds_only_new_files(spark, tmp_path):
 
     streamed = {
         r["bucket"]: (r["cksum"], r["kvs"])
-        for r in spark.read.parquet(f"{mpath}/triples").collect()
+        for r in spark.read.parquet(mpath).collect()
     }
     batch = {
         r["bucket"]: (r["cksum"], r["kvs"])
@@ -440,6 +440,7 @@ def test_manifest_stream_range_buckets_equal_batch(spark, tmp_path):
         bucket_triples,
         range_bucket_boundaries,
         range_bucket_col,
+        range_bucketing,
     )
     from tikv_data_compare_spark.streaming.manifest_stream import (
         fold_batch_into_manifest,
@@ -466,11 +467,12 @@ def test_manifest_stream_range_buckets_equal_batch(spark, tmp_path):
     q = manifest_stream(
         stream, keys=("k",), path=mpath,
         checkpoint_location=str(tmp_path / "range_ckpt"),
-        range_key="k", boundaries=bounds,
+        bucket_expr=lambda: range_bucket_col("k", bounds),
+        meta=range_bucketing("k", bounds)[1],
     )
     q.awaitTermination(120)
 
-    got = spark.read.parquet(f"{mpath}/triples")
+    got = spark.read.parquet(mpath)
     # boundaries persisted as the same meta columns the batch CLI writes
     meta = got.select("range_key", "range_boundaries").first()
     assert meta["range_key"] == "k"
@@ -487,10 +489,9 @@ def test_manifest_stream_range_buckets_equal_batch(spark, tmp_path):
 
     # validated from meta: folding with DIFFERENT boundaries is refused
     keyed = Keyed.of(df.limit(10), keys=("k",))
+    bucket, meta = range_bucketing("k", bounds[:-1])
     with pytest.raises(ValueError, match="range_boundaries"):
-        fold_batch_into_manifest(
-            keyed, mpath, range_key="k", boundaries=bounds[:-1], epoch_id=99
-        )
+        fold_batch_into_manifest(keyed, mpath, bucket, epoch_id=99, meta=meta)
     # ... as is folding a hash bucketing into a range manifest
     with pytest.raises(ValueError, match="range-bucketed"):
         fold_batch_into_manifest(

@@ -75,6 +75,20 @@ def _typed_bound(raw: str, col: str, type_name: str):
     )
 
 
+def _bounds(args, col: str = "key", type_name: str = "binary") -> tuple:
+    """``(start, end)`` of ``--start-key/--end-key`` for a key column of the
+    given type (None = unbounded)."""
+
+    def parse(raw: str):
+        if not raw:
+            return None
+        if type_name == "binary":
+            return codec.parse_key(args.key_format, raw)
+        return _typed_bound(raw, col, type_name)
+
+    return parse(args.start_key), parse(args.end_key)
+
+
 def _keyed(spark, path: str, keys: list[str], args):
     from tikv_data_compare_spark.model import Keyed
     from tikv_data_compare_spark.sources import meta as meta_mod
@@ -83,18 +97,20 @@ def _keyed(spark, path: str, keys: list[str], args):
         # a live cluster addressed by PD endpoint, exactly the reference's
         # --src-pd/--dst-pd UX (config/config.go:10-18); tikv+fake:// drives
         # the in-memory client for tests/demos.  The live path fails loudly
-        # until a tikv-client adapter exists (sources/tikv.py).
+        # until a tikv-client adapter exists (sources/tikv.py).  The range
+        # goes into the connector, which clamps its region sub-ranges to it.
         from tikv_data_compare_spark.sources.tikv import load_tikv
 
         scheme, _, addr = path.partition("://")
-        k = load_tikv(
+        start, end = _bounds(args)
+        return load_tikv(
             spark,
             pd_addr=addr or None,
+            start=start,
+            end=end,
             client="fake" if scheme == "tikv+fake" else "live",
         )
-        keys = ["key"]
-        df = k.df
-    elif meta_mod.is_scan_dump(path):
+    if meta_mod.is_scan_dump(path):
         # a reference-format scan dump ({NAME}_scan.log.<ts>, scan/scan.go:35)
         # opens as the canonical binary KV pair; the running counter is a
         # file artifact, not data — drop it from comparisons
@@ -102,22 +118,28 @@ def _keyed(spark, path: str, keys: list[str], args):
 
         df = load_scan_dump(spark, path).drop("cnt")
         keys = ["key"]
-        k = Keyed.of(df, keys=("key",))
     else:
         df = spark.read.parquet(path)
-        k = Keyed.of(df, keys=tuple(keys))
-    raw_start, raw_end = args.start_key, args.end_key
-    if not raw_start and not raw_end:
+    k = Keyed.of(df, keys=tuple(keys))
+    if not args.start_key and not args.end_key:
         return k
     first = keys[0]
     first_type = dict((f.name, f.dataType.typeName()) for f in df.schema.fields)[first]
-    if first_type == "binary":
-        start = codec.parse_key(args.key_format, raw_start) if raw_start else None
-        end = codec.parse_key(args.key_format, raw_end) if raw_end else None
-    else:
-        start = _typed_bound(raw_start, first, first_type) if raw_start else None
-        end = _typed_bound(raw_end, first, first_type) if raw_end else None
-    return k.in_range(start, end)
+    return k.in_range(*_bounds(args, first, first_type))
+
+
+def _range_boundaries(src, args) -> list[float]:
+    """``--range-key`` quantile boundaries.  A missing or non-numeric column
+    surfaces from approxQuantile as AnalysisException/Py4JJavaError; it is
+    re-raised as a ValueError like every other manifest operator error."""
+    from tikv_data_compare_spark.operators.checksum import range_bucket_boundaries
+
+    try:
+        return range_bucket_boundaries(src.df, args.range_key, args.buckets)
+    except Exception as e:  # noqa: BLE001 — Py4J surface
+        raise ValueError(
+            f"--range-key {args.range_key!r} failed: {getattr(e, 'desc', None) or e}"
+        ) from e
 
 
 def _coprocessor_verdict(args) -> dict | None:
@@ -144,8 +166,7 @@ def _coprocessor_verdict(args) -> dict | None:
         return None
     if not (hasattr(sc, "checksum") and hasattr(dc, "checksum")):
         return None  # client lacks the RPC — scan+Spark crc64 instead
-    start = codec.parse_key(args.key_format, args.start_key) if args.start_key else None
-    end = codec.parse_key(args.key_format, args.end_key) if args.end_key else None
+    start, end = _bounds(args)
     return compare_checksum_parallel(
         sc, dc, start, end, concurrency=args.concurrency or 10
     )
@@ -1611,95 +1632,41 @@ def main(argv: list[str] | None = None) -> int:
     keys = args.keys.split(",")
 
     if args.cmd == "manifest":
-        from pyspark.sql import functions as F
-
-        from tikv_data_compare_spark.operators.checksum import (
-            compare_to_manifest,
-            save_checksum_manifest,
-        )
+        from tikv_data_compare_spark.operators import checksum as ck
 
         if bool(args.save) == bool(args.against):
             print("manifest: pass exactly one of --save or --against", file=sys.stderr)
             return 2
         src = _keyed(spark, args.src, keys, args)
-        if args.save:
-            if args.range_key:
+        try:
+            if args.against:
+                # a range manifest's bucketing is rebuilt ENTIRELY from its
+                # stored boundaries (--buckets is irrelevant there); a hash
+                # manifest's n_buckets is validated against --buckets
+                old = spark.read.parquet(args.against)
+                if "range_key" in old.columns:
+                    bucket, meta = ck.manifest_bucketing(old, src.keys)
+                else:
+                    bucket, meta = ck.hash_bucketing(src.keys, args.buckets)
+                report = ck.compare_to_manifest(src, old, bucket, algo=args.algo, meta=meta)
+            elif args.range_key:
                 # range-aligned buckets: quantile boundaries computed ONCE
                 # here and STORED in the manifest, so compares reuse the
                 # identical bucketing (drift localizes to contiguous,
                 # pushdown-scannable key ranges instead of hash classes)
-                from tikv_data_compare_spark.operators.checksum import (
-                    range_bucket_boundaries,
-                    range_bucket_col,
-                )
-
-                try:
-                    bounds = range_bucket_boundaries(src.df, args.range_key, args.buckets)
-                    bucket = range_bucket_col(args.range_key, bounds)
-                except ValueError as e:
-                    # non-finite quantiles / bad bucket count: operator
-                    # error, same clean stderr + exit 2 as the compare path
-                    print(f"manifest: {e}", file=sys.stderr)
-                    return 2
-                except Exception as e:  # noqa: BLE001 — Py4J surface
-                    # a missing or non-numeric --range-key column surfaces
-                    # from approxQuantile as AnalysisException/Py4JJavaError;
-                    # keep the CLI contract (stderr + rc 2), not a traceback
-                    print(
-                        f"manifest: --range-key {args.range_key!r} failed: "
-                        f"{getattr(e, 'desc', None) or e}",
-                        file=sys.stderr,
-                    )
-                    return 2
-                meta = {
-                    "n_buckets": args.buckets,
-                    "range_key": args.range_key,
-                    "range_boundaries": json.dumps(bounds),
-                }
+                bucket, meta = ck.range_bucketing(args.range_key, _range_boundaries(src, args))
             else:
-                bucket = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in src.keys]), F.lit(args.buckets)
-                )
-                meta = {"n_buckets": args.buckets}
-            n = save_checksum_manifest(src, args.save, bucket, algo=args.algo, meta=meta)
+                bucket, meta = ck.hash_bucketing(src.keys, args.buckets)
+        except ValueError as e:
+            # bad --range-key, mismatched --buckets/--algo, an empty range
+            # manifest: operator errors, not crashes — stderr + exit 2
+            print(f"manifest: {e}", file=sys.stderr)
+            return 2
+        if args.save:
+            n = ck.save_checksum_manifest(src, args.save, bucket, algo=args.algo, meta=meta)
             print(json.dumps({"manifest": args.save, "buckets": n, "algo": args.algo,
                               "range_key": args.range_key or None}))
             return 0
-        # compare: rebuild the bucketing FROM THE MANIFEST (range boundaries
-        # if stored, hash otherwise) — the reuse contract made automatic
-        old = spark.read.parquet(args.against)
-        if "range_key" in old.columns:
-            from tikv_data_compare_spark.operators.checksum import range_bucket_col
-
-            mrow = old.select("range_key", "range_boundaries").first()
-            if mrow is None:
-                # a range manifest saved from an EMPTY snapshot has no rows
-                # to carry its boundaries — the bucketing cannot be rebuilt
-                # (the hash path handles empty manifests; range can't)
-                print(
-                    "manifest: range-keyed manifest is empty — boundaries "
-                    "cannot be recovered; re-save from a non-empty snapshot",
-                    file=sys.stderr,
-                )
-                return 2
-            bucket = range_bucket_col(mrow["range_key"], json.loads(mrow["range_boundaries"]))
-            # the bucketing is rebuilt ENTIRELY from the stored boundaries —
-            # --buckets is irrelevant here, and validating it would fail the
-            # documented no-flag compare flow (r8 review); algo is still
-            # validated inside compare_to_manifest
-            expect = {}
-        else:
-            bucket = F.pmod(F.xxhash64(*[F.col(c) for c in src.keys]), F.lit(args.buckets))
-            expect = {"n_buckets": args.buckets}
-        try:
-            report = compare_to_manifest(
-                src, old, bucket, algo=args.algo, expect_meta=expect
-            )
-        except ValueError as e:
-            # mismatched --buckets/--algo is an operator error, not a crash:
-            # same clean stderr + exit 2 as the argument validation above
-            print(f"manifest: {e}", file=sys.stderr)
-            return 2
         n = 0
         for row in report.toLocalIterator():
             print(json.dumps(row.asDict()))
@@ -1739,8 +1706,7 @@ def main(argv: list[str] | None = None) -> int:
             return 0 if v["equal"] else 1
 
         if args.cmd == "diff":
-            from pyspark.sql import functions as F
-
+            from tikv_data_compare_spark.operators.checksum import hash_bucketing
             from tikv_data_compare_spark.operators.diff import diff, targeted_diff
 
             dst = _keyed(spark, args.dst, keys, args)
@@ -1765,22 +1731,15 @@ def main(argv: list[str] | None = None) -> int:
                       "(bucket checksums are exact; sub-eps jitter would flag "
                       "every bucket)", file=sys.stderr)
                 return 2
-            if tolerances:
-                from tikv_data_compare_spark.operators.diff import diff_tolerant
-
+            if args.targeted_buckets > 0:
+                bucket, _ = hash_bucketing(src.keys, args.targeted_buckets)
+                findings = targeted_diff(src, dst, bucket)
+            else:
                 try:
-                    findings = diff_tolerant(src, dst, tolerances)
+                    findings = diff(src, dst, tolerances=tolerances)
                 except ValueError as e:
                     print(f"diff: {e}", file=sys.stderr)
                     return 2
-            elif args.targeted_buckets > 0:
-                bucket = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in src.keys]),
-                    F.lit(args.targeted_buckets),
-                )
-                findings = targeted_diff(src, dst, bucket)
-            else:
-                findings = diff(src, dst)
             n = 0
             for row in findings.toLocalIterator():
                 n += 1

@@ -22,7 +22,7 @@ Layout under ``path/``:
                   m, k_codes, seed, sample_rows, format version) — the
                   compare-time validation that an index built with one
                   geometry is never queried with another (same contract as
-                  the checksum manifests' ``expect_meta``).
+                  the checksum manifests' ``meta``).
 
 The reference has no ANN surface (it is a KV-compare tool); this module is
 part of the LLM-data-pipeline extension mandated by the build brief, and

@@ -20,13 +20,27 @@ Hash algorithms (per-row contribution, XOR-combined):
                 checkable bit-for-bit.
 - ``crc64``:    CRC-64/XZ over ``key ++ value`` bytes via Pandas UDF —
                 byte-compatible with real TiKV cluster checksums.
+
+Every triple in this module comes from one aggregate (``_triples``), every
+bucket-triple compare from one join (``drifted_buckets``), and every
+checksum manifest has one format: a parquet directory at the path the
+caller passes, columns ``bucket, cksum, kvs, algo, last_epoch`` plus one
+constant column per metadata item — ``n_buckets`` for hash buckets
+(``hash_bucketing``), ``range_key`` and ``range_boundaries`` (a JSON list)
+for range buckets (``range_bucketing``).  ``last_epoch`` is the highest
+stream epoch folded in (streaming/manifest_stream.py); a batch
+``save_checksum_manifest`` writes -1, so a stream continues it from
+epoch 0.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from tikv_data_compare_spark.functions import sqlgen
+from tikv_data_compare_spark.functions.fsutil import recover_swap, swap_commit
 from tikv_data_compare_spark.model import Keyed, check_comparable
 
 ALGOS = ("xxhash64", "md5i64", "crc64")
@@ -150,6 +164,32 @@ def _byte_len(keyed: Keyed, tags: dict[str, str] | None, fast: bool = False) -> 
     return F.length(F.expr(_row_canon_expr(keyed, list(keyed.columns), tags)))
 
 
+def _triples(
+    keyed: Keyed,
+    algo: str = "xxhash64",
+    tags: dict[str, str] | None = None,
+    by: Column | str | None = None,
+    canon_bytes: bool = False,
+) -> DataFrame:
+    """The one triple aggregate: ``(checksum, total_kvs, total_bytes)`` =
+    ``(bit_xor(hash), count, sum(bytes))``, the reference's ``(XOR, +, +)``
+    monoid, grouped by nothing, by an existing column (``"side"``) or by a
+    bucket Column (output column ``bucket``).  Callers that project
+    ``total_bytes`` away get the sum pruned by Catalyst.
+    """
+    df, h = _with_hash(keyed, algo, tags)
+    if isinstance(by, Column):  # after the hash: keeps the projection order
+        df, by = df.withColumn("bucket", by), "bucket"
+    fast = algo == "xxhash64" and not canon_bytes
+    return (df.groupBy(by) if by else df.groupBy()).agg(
+        F.bit_xor(F.col(h)).alias("checksum"),
+        F.count(F.lit(1)).alias("total_kvs"),
+        F.sum(_byte_len(Keyed(df, keyed.keys, keyed.values), tags, fast=fast)).alias(
+            "total_bytes"
+        ),
+    )
+
+
 def checksum(
     keyed: Keyed,
     algo: str = "xxhash64",
@@ -166,18 +206,7 @@ def checksum(
     byte length even in xxhash64 mode, whose default fast path sums raw
     string byte lengths (same change-detection power, Spark-only rendering).
     """
-    df, h = _with_hash(keyed, algo, tags)
-    return df.agg(
-        F.bit_xor(F.col(h)).alias("checksum"),
-        F.count(F.lit(1)).alias("total_kvs"),
-        F.sum(
-            _byte_len(
-                Keyed(df, keyed.keys, keyed.values),
-                tags,
-                fast=(algo == "xxhash64") and not canon_bytes,
-            )
-        ).alias("total_bytes"),
-    )
+    return _triples(keyed, algo, tags, canon_bytes=canon_bytes)
 
 
 def compare_checksum(
@@ -197,18 +226,8 @@ def compare_checksum(
     s = src.df.select(*src.columns).withColumn("side", F.lit("src"))
     d = dst.df.select(*dst.columns).withColumn("side", F.lit("dst"))
     both = Keyed(s.unionByName(d), src.keys, src.values)
-    df, h = _with_hash(both, algo, tags)
-    return (
-        df.groupBy("side")
-        .agg(
-            F.bit_xor(F.col(h)).alias("checksum"),
-            F.count(F.lit(1)).alias("total_kvs"),
-            F.sum(
-                _byte_len(Keyed(df, both.keys, both.values), tags, fast=(algo == "xxhash64"))
-            ).alias("total_bytes"),
-        )
-        .orderBy(F.desc("side"))  # src before dst, deterministic report order
-    )
+    # src before dst, deterministic report order
+    return _triples(both, algo, tags, by="side").orderBy(F.desc("side"))
 
 
 def checksum_verdict(src: Keyed, dst: Keyed, algo: str = "xxhash64", tags=None) -> dict:
@@ -248,7 +267,7 @@ def range_bucket_boundaries(
     the union) and passed to BOTH sides / stored in the manifest's meta —
     re-deriving them per side would bucket the sides differently and
     report everything as drifted.  This is the same class of contract the
-    manifest's ``expect_meta`` already validates.
+    manifest's ``meta`` already validates.
     """
     import math
 
@@ -302,21 +321,136 @@ def range_bucket_col(key: str, boundaries: list[float]) -> Column:
     )
 
 
+def hash_bucketing(keys, n_buckets: int) -> tuple[Column, dict]:
+    """``pmod(xxhash64(keys), n_buckets)`` and the meta that records it."""
+    bucket = F.pmod(F.xxhash64(*[F.col(c) for c in keys]), F.lit(n_buckets))
+    return bucket, {"n_buckets": n_buckets}
+
+
+def range_bucketing(key: str, boundaries: list[float]) -> tuple[Column, dict]:
+    """:func:`range_bucket_col` buckets and the meta that records them (the
+    boundaries as a JSON string, so they round-trip through parquet)."""
+    bounds = [float(b) for b in boundaries]
+    return range_bucket_col(key, bounds), {
+        "range_key": key,
+        "range_boundaries": json.dumps(bounds),
+    }
+
+
+def manifest_bucketing(manifest: DataFrame, keys) -> tuple[Column, dict]:
+    """Rebuild the bucketing a stored manifest's metadata records: range
+    buckets from its stored boundaries, else hash buckets over ``keys``."""
+    cols = [c for c in manifest.columns if c not in MANIFEST_COLUMNS]
+    row = manifest.select(*cols).first() if cols else None
+    meta = row.asDict() if row else {}
+    if "range_key" in meta:
+        return range_bucketing(meta["range_key"], json.loads(meta["range_boundaries"]))
+    if "n_buckets" in meta:
+        return hash_bucketing(keys, int(meta["n_buckets"]))
+    raise ValueError(
+        "manifest records no bucketing to rebuild (no n_buckets or "
+        "range_key/range_boundaries row; a manifest saved from an empty "
+        "snapshot carries none) — re-save from a non-empty snapshot"
+    )
+
+
 def bucket_triples(keyed: Keyed, bucket, algo: str = "xxhash64") -> DataFrame:
     """Per-bucket checksum triples ``(bucket, cksum, kvs, algo)``.
 
     ``bucket`` is a Column over the key columns (e.g. ``floor(k / 1000)``,
-    a date, a region id).  ~16 bytes per bucket cross the shuffle — the
-    same map-side monoid fold as :func:`checksum`, keyed by bucket.  This
-    is the shared core of ``targeted_diff`` and the manifest flow below.
+    a date, a region id); it keeps its own type (long, date, string region
+    id — all groupable/joinable).  ~16 bytes per bucket cross the shuffle —
+    the same map-side monoid fold as :func:`checksum`, keyed by bucket.
+    This is the shared core of ``targeted_diff`` and the manifest flow.
     """
-    df, h = _with_hash(keyed, algo, None)
-    return (
-        df.withColumn("bucket", bucket)  # bucket keeps its own type: long,
-        .groupBy("bucket")  # date, string region id — all groupable/joinable
-        .agg(F.bit_xor(F.col(h)).alias("cksum"), F.count(F.lit(1)).alias("kvs"))
-        .withColumn("algo", F.lit(algo))
+    return _triples(keyed, algo, by=bucket).select(
+        "bucket",
+        F.col("checksum").alias("cksum"),
+        F.col("total_kvs").alias("kvs"),
+        F.lit(algo).alias("algo"),
     )
+
+
+def drifted_buckets(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Unsorted full-outer compare of two ``(bucket, cksum, kvs)`` frames:
+    the buckets whose triples differ (or exist on one side only), as
+    ``_bucket`` plus ``a._cksum``/``a._kvs`` and ``b._cksum``/``b._kvs``.
+
+    Both inputs are post-aggregation bucket triples (~16 bytes per bucket),
+    and the full-outer equi-join is a sort-merge join BY DESIGN — Spark
+    cannot broadcast a full_outer join (it preserves both sides), and at
+    ~16 B/bucket the SMJ exchange is negligible next to the scans feeding it.
+    """
+
+    def side(t: DataFrame, name: str) -> DataFrame:
+        return t.select(
+            F.col("bucket").alias("_bucket"),
+            F.col("cksum").alias("_cksum"),
+            F.col("kvs").alias("_kvs"),
+        ).alias(name)
+
+    j = side(a, "a").join(side(b, "b"), on="_bucket", how="full_outer")
+    same = F.col("a._cksum").eqNullSafe(F.col("b._cksum")) & F.col("a._kvs").eqNullSafe(
+        F.col("b._kvs")
+    )
+    return j.filter(~same)
+
+
+# -- the manifest format: one reader, one writer, one metadata validator ----
+
+#: every manifest column that is not bucketing metadata
+MANIFEST_COLUMNS = ("bucket", "cksum", "kvs", "algo", "last_epoch")
+
+
+def read_manifest(spark, manifest: DataFrame | str) -> DataFrame | None:
+    """The manifest at a path (None when there is none yet), or a manifest
+    DataFrame as passed.  A crash between the two renames of a previous
+    write leaves ``<path>.old`` as the only copy; it is restored first."""
+    if not isinstance(manifest, str):
+        return manifest
+    return spark.read.parquet(manifest) if recover_swap(manifest) else None
+
+
+def write_manifest(triples: DataFrame, path: str, algo: str, epoch: int, meta: dict) -> None:
+    """Write ``(bucket, cksum, kvs)`` triples as the manifest at ``path``:
+    one parquet file of ``bucket, cksum, kvs, algo, last_epoch`` plus one
+    constant column per ``meta`` item, committed by a directory swap."""
+    out = triples.select(
+        "bucket",
+        "cksum",
+        "kvs",
+        F.lit(algo).alias("algo"),
+        F.lit(int(epoch)).cast("long").alias("last_epoch"),
+        *[F.lit(v).alias(k) for k, v in meta.items()],
+    )
+    swap_commit(out, path, coalesce=1)
+
+
+def _bucketing_kind(cols) -> str:
+    kind = "range" if "range_key" in cols else "hash" if "n_buckets" in cols else "expression"
+    return f"{kind}-bucketed (metadata {sorted(cols)})"
+
+
+def validate_manifest(old: DataFrame, algo: str, meta: dict, where: str = "manifest") -> None:
+    """Refuse triples built with another hash algorithm or bucketing: the
+    stored metadata columns must be exactly ``meta``'s keys, and every
+    stored value must equal the requested one.  An EMPTY manifest (saved
+    from an empty snapshot) has no values to check, which is legitimate."""
+    stored = [c for c in old.columns if c not in MANIFEST_COLUMNS]
+    if set(stored) != set(meta):
+        raise ValueError(
+            f"{where} is {_bucketing_kind(stored)}, the request is "
+            f"{_bucketing_kind(meta)} — triples of different bucketings are "
+            "not comparable"
+        )
+    want = {"algo": algo, **meta}
+    got = old.agg(*[F.collect_set(c).alias(c) for c in want]).first()
+    for col, value in want.items():
+        if got[col] and got[col] != [value]:
+            raise ValueError(
+                f"{where} was built with {col}={got[col]}, requested {value!r} "
+                "— triples from different bucketings/hash algorithms are not comparable"
+            )
 
 
 def save_checksum_manifest(
@@ -333,17 +467,16 @@ def save_checksum_manifest(
     flips its bucket's triple; a ~2^-64 hash collision per drifted bucket
     is the residual risk, same as the reference's Crc64Xor verdict.
 
-    ``meta`` key/values (e.g. the bucket count the expression was built
-    from) are stored as constant columns; a later compare validates them
-    via ``expect_meta`` so triples built from DIFFERENT bucketings can't be
-    silently compared (they would report everything as drifted).
+    ``meta`` (e.g. from :func:`hash_bucketing` / :func:`range_bucketing`)
+    records the bucketing as constant columns; every later compare or fold
+    validates it, so triples built from DIFFERENT bucketings can't be
+    silently compared (they would report everything as drifted).  The
+    manifest is written with ``last_epoch = -1``, so a stream
+    (streaming/manifest_stream.py) can continue it from epoch 0.
     """
-    t = bucket_triples(keyed, bucket, algo)
-    for k, v in (meta or {}).items():
-        t = t.withColumn(k, F.lit(v))
-    t.coalesce(1).write.mode("overwrite").parquet(path)
+    write_manifest(bucket_triples(keyed, bucket, algo), path, algo, -1, meta or {})
     # count the WRITTEN manifest (parquet footer metadata), not the plan —
-    # re-counting t would rescan and re-hash the whole snapshot
+    # re-counting the triples would rescan and re-hash the whole snapshot
     return keyed.df.sparkSession.read.parquet(path).count()
 
 
@@ -352,7 +485,7 @@ def compare_to_manifest(
     manifest: DataFrame | str,
     bucket,
     algo: str = "xxhash64",
-    expect_meta: dict | None = None,
+    meta: dict | None = None,
 ) -> DataFrame:
     """Tall drift report of ``keyed`` (the CURRENT snapshot) against a saved
     manifest: one row per drifted bucket —
@@ -360,54 +493,29 @@ def compare_to_manifest(
     ``(bucket, status, old_cksum, new_cksum, old_kvs, new_kvs)`` with
     status ∈ {changed, only_old, only_new}.  Empty result = no drift.
 
-    Raises if the manifest was built with a different ``algo`` (triples of
-    different hash algorithms are not comparable).  The current snapshot is
-    scanned exactly once; both join inputs are post-aggregation bucket
-    triples (~16 bytes per bucket), and the full-outer equi-join on the
-    bucket id is a sort-merge join BY DESIGN — Spark cannot execute a
-    broadcast hash join for full_outer (only the non-preserved side could
-    be broadcast, and full_outer preserves both), and at ~16 B/bucket the
-    SMJ exchange is negligible next to the snapshot scan that feeds it.
+    Raises if the manifest was built with a different ``algo`` or with
+    bucketing metadata other than ``meta`` (see :func:`validate_manifest`).
+    The current snapshot is scanned exactly once; the compare itself is
+    :func:`drifted_buckets`.
     """
-    spark = keyed.df.sparkSession
-    old = spark.read.parquet(manifest) if isinstance(manifest, str) else manifest
-    checks = {"algo": algo, **(expect_meta or {})}
-    for col, want in checks.items():
-        if col not in old.columns:
-            if col == "algo":
-                continue  # pre-meta manifests carry no algo column
-            raise ValueError(f"manifest has no {col!r} metadata column to validate")
-        got = [r[col] for r in old.select(col).distinct().collect()]
-        # an EMPTY manifest (saved from an empty snapshot) has no metadata
-        # rows to validate — legitimate; every current bucket reports only_new
-        if got and got != [want]:
-            raise ValueError(
-                f"manifest was built with {col}={got}, compare requested {want!r} "
-                "— triples from different bucketings/hash algorithms are not comparable"
-            )
-    new = bucket_triples(keyed, bucket, algo)
-    j = (
-        new.select("bucket", F.col("cksum").alias("new_cksum"), F.col("kvs").alias("new_kvs"))
-        .join(
-            # no broadcast hint: Spark ignores broadcast for full_outer
-            # equi-joins (r7 VERDICT) — the hint implied a plan it never got
-            old.select(
-                "bucket", F.col("cksum").alias("old_cksum"), F.col("kvs").alias("old_kvs")
-            ),
-            on="bucket",
-            how="full_outer",
-        )
-    )
+    old = read_manifest(keyed.df.sparkSession, manifest)
+    if old is None:
+        raise ValueError(f"no manifest at {manifest!r}")
+    validate_manifest(old, algo, meta or {})
     status = (
-        F.when(F.col("new_kvs").isNull(), F.lit("only_old"))
-        .when(F.col("old_kvs").isNull(), F.lit("only_new"))
+        F.when(F.col("a._kvs").isNull(), F.lit("only_old"))
+        .when(F.col("b._kvs").isNull(), F.lit("only_new"))
         .otherwise(F.lit("changed"))
     )
-    same = F.col("old_cksum").eqNullSafe(F.col("new_cksum")) & F.col("old_kvs").eqNullSafe(
-        F.col("new_kvs")
-    )
     return (
-        j.filter(~same)
-        .select("bucket", status.alias("status"), "old_cksum", "new_cksum", "old_kvs", "new_kvs")
+        drifted_buckets(bucket_triples(keyed, bucket, algo), old)
+        .select(
+            F.col("_bucket").alias("bucket"),
+            status.alias("status"),
+            F.col("b._cksum").alias("old_cksum"),
+            F.col("a._cksum").alias("new_cksum"),
+            F.col("b._kvs").alias("old_kvs"),
+            F.col("a._kvs").alias("new_kvs"),
+        )
         .orderBy("bucket")
     )

@@ -43,8 +43,7 @@ def diff(
     per value column with null-safe equality; one-sided rows replace the
     reference's cardinality warning (diff/diff.go:44-46) with exact findings.
 
-    ``tolerances`` (validated by the :func:`diff_tolerant` wrapper —
-    prefer calling that) relaxes listed numeric columns: a float value is
+    ``tolerances`` relaxes listed numeric columns: a float value is
     an absolute epsilon (``|src − dst| <= eps``); an ``(abs_eps, rel)``
     tuple is the numpy.isclose-style band
     ``|src − dst| <= max(abs_eps, rel · max(|src|, |dst|))`` — relative
@@ -55,8 +54,14 @@ def diff(
     only ever RELAX the exact predicate, never tighten it; the subtraction
     runs in the column's OWN numeric type (exact for integers/decimals — a
     premature double cast would hide a drift of 1 at 2⁵³ magnitude).
+    Validation: tolerance columns must be value columns of a NUMERIC type (a
+    silently-nulling string cast would suppress all drift in the column),
+    and every eps must be a FINITE number ≥ 0 (NaN compares
+    greater-than-everything in Spark, which would make every row "within
+    tolerance").
     """
     check_comparable(src, dst)
+    _check_tolerances(src, tolerances or {})
     keys = list(src.keys)
     s = src.df.select(
         *keys,
@@ -113,44 +118,9 @@ def diff(
     return out.select(*keys, "status", *[f"src_{v}" for v in src.values], *[f"dst_{v}" for v in dst.values])
 
 
-def diff_tolerant(
-    src: Keyed,
-    dst: Keyed,
-    tolerances: "dict[str, float | tuple[float, float]]",
-    include_equal: bool = False,
-) -> DataFrame:
-    """Keyed diff with per-column NUMERIC tolerance: a column listed in
-    ``tolerances`` counts equal when its drift is within the band (both-NULL
-    is equal, one-sided NULL differs); every other column keeps the exact
-    null-safe equality of :func:`diff`.  A float value is an absolute
-    epsilon; an ``(abs_eps, rel)`` tuple adds RELATIVE tolerance —
-    ``|src − dst| <= max(abs_eps, rel · max(|src|, |dst|))`` — the form
-    recompute drift actually takes at scale (float error is proportional
-    to magnitude; a fixed eps is simultaneously too loose for small values
-    and too tight for large ones).
-
-    Why it exists: re-encoded or recomputed float columns legitimately
-    jitter in the last ulps (codec roundtrips, aggregation re-orders,
-    compression transcodes), and the reference's byte-exact compare
-    reports that noise as drift — at 100 TB, millions of false findings
-    drowning the real ones.  Same single full-outer sort-merge join and
-    output shape as :func:`diff` (this is a validating wrapper around it —
-    one scaffolding, two predicates, so the paths cannot diverge);
-    the tolerance predicate stays inside whole-stage codegen (no UDF).
-
-    Semantics pinned by tests/test_diff.py: null-safe equality
-    short-circuits BEFORE the arithmetic, so both-NULL and NaN==NaN rows
-    stay equal (a tolerance can only relax the exact diff, never tighten
-    it), and the subtraction runs in the column's own numeric type, so an
-    integer drift of 1 at 2⁵³ magnitude is still detected.  Validation:
-    tolerance columns must exist, be NUMERIC (a silently-nulling string
-    cast would suppress all drift in the column), and carry a FINITE
-    eps ≥ 0 (NaN compares greater-than-everything in Spark, which would
-    make every row "within tolerance").
-    """
+def _check_tolerances(src: Keyed, tolerances: dict) -> None:
     import math
 
-    check_comparable(src, dst)
     numeric = {"double", "float", "long", "integer", "short", "byte", "decimal"}
     dtypes = {f.name: f.dataType.typeName() for f in src.df.schema.fields}
     for c, spec in tolerances.items():
@@ -171,6 +141,34 @@ def diff_tolerant(
                 raise ValueError(
                     f"tolerance for {c!r} must be finite number(s) >= 0, got {spec!r}"
                 )
+
+
+def diff_tolerant(
+    src: Keyed,
+    dst: Keyed,
+    tolerances: "dict[str, float | tuple[float, float]]",
+    include_equal: bool = False,
+) -> DataFrame:
+    """Keyed diff with per-column NUMERIC tolerance: a column listed in
+    ``tolerances`` counts equal when its drift is within the band (both-NULL
+    is equal, one-sided NULL differs); every other column keeps the exact
+    null-safe equality of :func:`diff`.  A float value is an absolute
+    epsilon; an ``(abs_eps, rel)`` tuple adds RELATIVE tolerance —
+    ``|src − dst| <= max(abs_eps, rel · max(|src|, |dst|))`` — the form
+    recompute drift actually takes at scale (float error is proportional
+    to magnitude; a fixed eps is simultaneously too loose for small values
+    and too tight for large ones).
+
+    Why it exists: re-encoded or recomputed float columns legitimately
+    jitter in the last ulps (codec roundtrips, aggregation re-orders,
+    compression transcodes), and the reference's byte-exact compare
+    reports that noise as drift — at 100 TB, millions of false findings
+    drowning the real ones.  It only calls :func:`diff`, which validates
+    the tolerances and keeps the single full-outer sort-merge join and
+    output shape (one scaffolding, two predicates, so the paths cannot
+    diverge); the tolerance predicate stays inside whole-stage codegen (no
+    UDF).  Semantics are pinned by tests/test_diff.py.
+    """
     return diff(src, dst, include_equal=include_equal, tolerances=tolerances)
 
 
@@ -259,25 +257,17 @@ def targeted_diff(src: Keyed, dst: Keyed, bucket, algo: str = "xxhash64") -> Dat
     probability ~2⁻⁶⁴ per drifted bucket, the same failure class the
     reference accepts for its whole checksum verdict.
     """
-    from tikv_data_compare_spark.operators.checksum import bucket_triples
+    from tikv_data_compare_spark.operators.checksum import (
+        bucket_triples,
+        drifted_buckets,
+    )
 
     check_comparable(src, dst)
-
-    def triples(k: Keyed) -> DataFrame:
-        # shared monoid-fold core with the manifest flow (checksum.py) —
-        # one implementation, so the pytest-pinned manifest/targeted_diff
-        # bucket-set agreement cannot drift
-        return bucket_triples(k, bucket, algo).select(
-            F.col("bucket").alias("_bucket"),
-            F.col("cksum").alias("_cksum"),
-            F.col("kvs").alias("_kvs"),
-        )
-    st, dt = triples(src), triples(dst)
-    joined = st.alias("s").join(dt.alias("d"), on="_bucket", how="full_outer")
-    same = F.col("s._cksum").eqNullSafe(F.col("d._cksum")) & F.col("s._kvs").eqNullSafe(
-        F.col("d._kvs")
-    )
-    bad = joined.filter(~same).select("_bucket")
+    # the same triples and compare as the manifest flow (checksum.py), so
+    # the pytest-pinned manifest/targeted_diff bucket-set agreement holds
+    bad = drifted_buckets(
+        bucket_triples(src, bucket, algo), bucket_triples(dst, bucket, algo)
+    ).select("_bucket")
 
     def restrict(k: Keyed) -> Keyed:
         filtered = (
@@ -303,38 +293,26 @@ def column_mismatch_profile(src: Keyed, dst: Keyed) -> DataFrame:
 
     This is the drill-down the reference's per-row report (diff/diff.go:49-62)
     can't answer — "which column drifted?" — and the natural next step after
-    :func:`diff_count` says ``changed > 0``.  Shape: the same single
-    full-outer sort-merge join as :func:`diff`, collapsed by one conditional
-    aggregate into a single row, then unpivoted driver-side-free via
-    ``stack`` into one row per column.  At 100 TB: one shuffle per side,
-    constant-size output.  Covered by tests/test_diff.py against hand-built
-    mismatch fixtures.
+    :func:`diff_count` says ``changed > 0``.  Shape: :func:`diff`
+    with ``include_equal=True`` (its single full-outer sort-merge join),
+    keeping the keys present on both sides (status changed or equal),
+    collapsed by one conditional aggregate into a single row, then
+    unpivoted inside Spark via ``stack`` into one row per column.  At
+    100 TB: one shuffle per side, constant-size output.  Covered by
+    tests/test_diff.py against hand-built mismatch fixtures.
     """
-    check_comparable(src, dst)
     if not src.values:
         raise ValueError(
             "column_mismatch_profile needs at least one value column; a keys-only "
             "Keyed has no columns to profile (use diff_count for presence-only diffs)"
         )
-    keys = list(src.keys)
-    s = src.df.select(
-        *keys,
-        *[F.col(v).alias(f"src_{v}") for v in src.values],
-        F.lit(True).alias("_in_src"),
+    both = diff(src, dst, include_equal=True).filter(
+        F.col("status").isin(STATUS_CHANGED, STATUS_EQUAL)
     )
-    d = dst.df.select(
-        *keys,
-        *[F.col(v).alias(f"dst_{v}") for v in dst.values],
-        F.lit(True).alias("_in_dst"),
-    )
-    j = s.join(d, on=keys, how="full_outer")
-    both = F.col("_in_src").isNotNull() & F.col("_in_dst").isNotNull()
-    agg = j.agg(
-        F.count(F.when(both, 1)).cast("long").alias("_n_both"),
+    agg = both.agg(
+        F.count(F.lit(1)).cast("long").alias("_n_both"),
         *[
-            F.count(
-                F.when(both & ~F.col(f"src_{v}").eqNullSafe(F.col(f"dst_{v}")), 1)
-            )
+            F.count(F.when(~F.col(f"src_{v}").eqNullSafe(F.col(f"dst_{v}")), 1))
             .cast("long")
             .alias(f"_mm_{v}")
             for v in src.values

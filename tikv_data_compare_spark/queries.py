@@ -1223,7 +1223,7 @@ def q_checksum_range_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         mroot, bucket_expr, algo="md5i64", epoch_id=1,
     )
     drift = compare_to_manifest(
-        dst_k, spark.read.parquet(f"{mroot}/triples"), bucket_expr, algo="md5i64"
+        dst_k, mroot, bucket_expr, algo="md5i64"
     )
     man = drift.select(
         F.lit("manifest").alias("part"),

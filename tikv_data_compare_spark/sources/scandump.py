@@ -12,11 +12,10 @@ DataSource API, with:
   ranges at line boundaries (the same recipe Spark's own text source uses),
   so one multi-GB dump fans out across the cluster instead of pinning one
   task per file;
-- **key-range pushdown**: ``key >= X`` / ``key < Y`` predicates (and the
-  explicit ``start_key``/``end_key`` hex options) are evaluated inside the
-  reader while parsing — rows outside the range never reach Spark, the
-  Python analogue of the reference shipping the range inside the Scan RPC
-  (scan/scan.go:45).
+- **key-range pushdown**: ``key >= X`` / ``key < Y`` predicates (what
+  ``Keyed.in_range`` builds) are evaluated inside the reader while
+  parsing — rows outside the range never reach Spark, the Python analogue
+  of the reference shipping the range inside the Scan RPC (scan/scan.go:45).
 
 Usage::
 
@@ -99,9 +98,8 @@ class ScanDumpReader(DataSourceReader):
         if not self.path:
             raise ValueError("tikv_scandump requires .option('path', ...) or load(path)")
         self.chunk_bytes = int(options.get("chunk_bytes", _DEFAULT_CHUNK))
-        # explicit range options (hex, reference config/config.go:32-33 style)
-        self.start_key = bytes.fromhex(options["start_key"]) if options.get("start_key") else None
-        self.end_key = bytes.fromhex(options["end_key"]) if options.get("end_key") else None
+        self.start_key: bytes | None = None  # [start, end) set by pushFilters
+        self.end_key: bytes | None = None
 
     # -- range pushdown -----------------------------------------------------
     def pushFilters(self, filters: List[Filter]) -> Iterable[Filter]:
@@ -215,15 +213,11 @@ def register(spark) -> None:
     spark.dataSource.register(ScanDumpDataSource)
 
 
-def load_scan_dump(spark, path: str, start=None, end=None, chunk_bytes: int | None = None):
-    """Open a reference scan dump as a keyed KV DataFrame with the range
-    applied at the reader (convenience over the raw format API)."""
+def load_scan_dump(spark, path: str, chunk_bytes: int | None = None):
+    """Open a reference scan dump as a KV DataFrame (convenience over the
+    raw format API); key-range filters on it are pushed into the reader."""
     register(spark)
     r = spark.read.format("tikv_scandump").option("path", path)
-    if start is not None:
-        r = r.option("start_key", start.hex() if isinstance(start, bytes) else str(start))
-    if end is not None:
-        r = r.option("end_key", end.hex() if isinstance(end, bytes) else str(end))
     if chunk_bytes:
         r = r.option("chunk_bytes", str(chunk_bytes))
     return r.load()

@@ -13,118 +13,76 @@ monoid's whole point, and the equality is contract-tested).
 
 Exactly-once: ``foreachBatch`` may redeliver an epoch after a failure, and
 an XOR fold is NOT idempotent — folding the same batch twice cancels its
-checksum contribution and double-counts kvs.  The stored manifest therefore
-carries a ``last_epoch`` watermark and silently skips epochs ≤ it.  The
-watermark is only meaningful against a PERSISTENT stream checkpoint —
+checksum contribution and double-counts kvs.  The manifest therefore
+carries a ``last_epoch`` watermark column and silently skips epochs ≤ it.
+The watermark is only meaningful against a PERSISTENT stream checkpoint —
 ``manifest_stream`` therefore requires ``checkpoint_location`` and restart
 correctness depends on reusing it (see the function docstring).  The
-watermark lives INSIDE the triples table (a constant column), so the data
-and the watermark commit in ONE directory swap — a crash between two
-separate commits could otherwise leave an epoch's data applied but
-unmarked (or vice versa), and the redelivery would corrupt the fold
-(r8 review).
+watermark is a constant column of the manifest itself, so the data and the
+watermark commit in ONE directory swap — a crash between two separate
+commits could otherwise leave an epoch's data applied but unmarked (or
+vice versa), and the redelivery would corrupt the fold.
+
+Format: the one manifest format of operators/checksum.py — a parquet
+directory at ``path`` with columns ``bucket, cksum, kvs, algo,
+last_epoch`` plus the bucketing metadata columns (``n_buckets``, or
+``range_key`` and ``range_boundaries``).  A manifest saved in batch has
+``last_epoch = -1``, so a stream can continue it from epoch 0, and a
+streamed manifest is compared exactly like a saved one.
 
 Scale notes: per micro-batch the work is one map-side hash + one ~16
 B/bucket aggregation, then a merge against a bucket-count-sized table —
 nothing grows with stream history except the manifest itself (bounded by
-the bucket count).  The swap-directory commit below is a local-FS stand-in
-for what a production deployment does with a transactional table format.
+the bucket count).  The swap-directory commit is a local-FS stand-in for
+what a production deployment does with a transactional table format.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from tikv_data_compare_spark.functions.fsutil import swap_commit
 from tikv_data_compare_spark.model import Keyed
-from tikv_data_compare_spark.operators.checksum import bucket_triples, range_bucket_col
-
-_TRIPLES = "triples"
-_RANGE_META = ("range_key", "range_boundaries")
-
-
-def _read_watermark(spark, path: str) -> int:
-    """Highest epoch already folded into the manifest, or -1 when no
-    manifest exists yet.  A present-but-unreadable manifest RAISES — a
-    silent -1 there would reset the watermark and let a redelivered epoch
-    corrupt the fold (r8 review)."""
-    triples_path = f"{path}/{_TRIPLES}"
-    if not os.path.exists(triples_path):
-        return -1
-    row = spark.read.parquet(triples_path).agg(F.max("last_epoch").alias("e")).first()
-    return int(row["e"]) if row and row["e"] is not None else -1
+from tikv_data_compare_spark.operators.checksum import (
+    bucket_triples,
+    read_manifest,
+    validate_manifest,
+    write_manifest,
+)
 
 
 def fold_batch_into_manifest(
     batch: Keyed,
     path: str,
-    bucket=None,
+    bucket,
     algo: str = "xxhash64",
     epoch_id: int = 0,
-    range_key: str | None = None,
-    boundaries: list[float] | None = None,
+    meta: dict | None = None,
 ) -> bool:
     """Fold ONE batch's bucket triples into the manifest at ``path``;
     returns False when the epoch was already applied (redelivery skip).
 
-    Bucketing is EITHER an explicit ``bucket`` Column (hash/divisor/date
-    buckets) OR ``range_key`` + ``boundaries`` from
-    :func:`~tikv_data_compare_spark.operators.checksum.range_bucket_boundaries`
-    — the skew-proof quantile buckets the batch ``--range-key`` manifests
-    use.  In range mode the boundaries are stored as manifest metadata
-    (the exact ``range_key``/``range_boundaries`` columns the CLI writes),
-    and every later fold validates its boundaries against the stored ones:
-    the boundaries are frozen at manifest creation — re-deriving them from
-    a micro-batch would bucket each epoch differently and corrupt the fold.
+    ``bucket`` and ``meta`` are what ``save_checksum_manifest`` takes — e.g.
+    the pair :func:`~tikv_data_compare_spark.operators.checksum.hash_bucketing`
+    or ``range_bucketing`` returns.  Every fold into an existing manifest
+    (saved or streamed) validates ``algo`` and ``meta`` against the stored
+    columns: range boundaries are frozen at manifest creation — re-deriving
+    them from a micro-batch would bucket each epoch differently and corrupt
+    the fold.
 
     Shared by the streaming sink below and any batch caller doing manual
     incremental loads (e.g. nightly partition appends).
     """
-    if (bucket is None) == (range_key is None):
-        raise ValueError("pass exactly one of bucket= or range_key=")
-    if range_key is not None:
-        if not boundaries and boundaries != []:
-            raise ValueError("range_key requires boundaries= (compute them ONCE "
-                             "with range_bucket_boundaries and reuse every fold)")
-        bucket = range_bucket_col(range_key, list(boundaries))
-    spark = batch.df.sparkSession
-    if epoch_id <= _read_watermark(spark, path):
-        return False
-    new = bucket_triples(batch, bucket, algo)
-    triples_path = f"{path}/{_TRIPLES}"
-    if os.path.exists(triples_path):
-        old = spark.read.parquet(triples_path)
-        # metadata gate: algo always; range bucketing when either side has it
-        checks: dict[str, str] = {"algo": algo}
-        if range_key is not None:
-            if not set(_RANGE_META) <= set(old.columns):
-                raise ValueError(
-                    f"manifest at {path!r} is hash-bucketed; cannot fold with "
-                    f"range_key={range_key!r} — bucketings are not mergeable"
-                )
-            checks["range_key"] = range_key
-            checks["range_boundaries"] = json.dumps([float(b) for b in boundaries])
-        elif set(_RANGE_META) <= set(old.columns):
-            raise ValueError(
-                f"manifest at {path!r} is range-bucketed (key "
-                f"{old.select('range_key').first()[0]!r}); pass range_key= and "
-                "its stored boundaries — folding a different bucketing would "
-                "corrupt it"
-            )
-        for col, want in checks.items():
-            got = [r[col] for r in old.select(col).distinct().collect()]
-            if got and got != [want]:
-                raise ValueError(
-                    f"manifest at {path!r} was built with {col}={got}, fold "
-                    f"requested {want!r} — triples of different "
-                    "bucketings/hash algorithms are not mergeable"
-                )
-        merged = (
-            old.drop("last_epoch", *_RANGE_META)
+    meta = meta or {}
+    old = read_manifest(batch.df.sparkSession, path)
+    new = bucket_triples(batch, bucket, algo).select("bucket", "cksum", "kvs")
+    if old is not None:
+        watermark = old.agg(F.max("last_epoch")).first()[0]
+        if watermark is not None and epoch_id <= watermark:
+            return False
+        validate_manifest(old, algo, meta, f"manifest at {path!r}")
+        new = (
+            old.select("bucket", "cksum", "kvs")
             .unionByName(new)
             .groupBy("bucket")
             .agg(
@@ -133,17 +91,9 @@ def fold_batch_into_manifest(
                 F.bit_xor("cksum").alias("cksum"),
                 F.sum("kvs").alias("kvs"),
             )
-            .withColumn("algo", F.lit(algo))
         )
-    else:
-        merged = new
-    merged = merged.withColumn("last_epoch", F.lit(int(epoch_id)))
-    if range_key is not None:
-        merged = merged.withColumn("range_key", F.lit(range_key)).withColumn(
-            "range_boundaries", F.lit(json.dumps([float(b) for b in boundaries]))
-        )
-    # ONE swap commits data + watermark (+ range meta) atomically
-    swap_commit(merged, triples_path)
+    # ONE swap commits data + watermark (+ meta) atomically
+    write_manifest(new, path, algo, epoch_id, meta)
     return True
 
 
@@ -151,23 +101,21 @@ def manifest_stream(
     stream_df: DataFrame,
     keys: tuple[str, ...],
     path: str,
-    bucket_expr=None,
+    bucket_expr,
     algo: str = "xxhash64",
     trigger_once: bool = True,
     checkpoint_location: str | None = None,
-    range_key: str | None = None,
-    boundaries: list[float] | None = None,
+    meta: dict | None = None,
 ) -> StreamingQuery:
     """Maintain a checksum manifest from an append-only stream.
 
     ``bucket_expr`` is a zero-arg callable returning the bucket Column
-    (callables, because Columns must be built on the micro-batch's lineage);
-    alternatively pass ``range_key`` + ``boundaries`` for the skew-proof
-    quantile bucketing (see :func:`fold_batch_into_manifest`).  The
-    resulting ``{path}/triples`` parquet has the exact
-    ``(bucket, cksum, kvs, algo)`` schema of ``save_checksum_manifest``
-    output, so ``compare_to_manifest(..., manifest=spark.read.parquet(
-    f"{path}/triples"))`` consumes it directly.
+    (callables, because Columns must be built on the micro-batch's lineage)
+    and ``meta`` the bucketing metadata to store and validate, as in
+    :func:`fold_batch_into_manifest`.  The manifest at ``path`` has the one
+    format of ``save_checksum_manifest``, so ``compare_to_manifest(...,
+    manifest=path)`` and the CLI's ``manifest --against`` consume it
+    directly.
 
     ``checkpoint_location`` is REQUIRED.  Restart correctness depends on
     reusing the SAME checkpoint directory for every start() over a given
@@ -187,20 +135,12 @@ def manifest_stream(
             "restarts epoch ids at 0 and corrupts the XOR fold on re-invocation; "
             "reuse one directory per source+manifest pair"
         )
-    if (bucket_expr is None) == (range_key is None):
-        raise ValueError("pass exactly one of bucket_expr= or range_key=")
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         fold_batch_into_manifest(
-            Keyed.of(batch_df, keys=keys),
-            path,
-            bucket_expr() if bucket_expr is not None else None,
-            algo,
-            epoch_id,
-            range_key=range_key,
-            boundaries=boundaries,
+            Keyed.of(batch_df, keys=keys), path, bucket_expr(), algo, epoch_id, meta
         )
 
     writer = (
